@@ -176,11 +176,11 @@ def test_append_refuses_redelivered_slice(spark, tmp_path):
 
 
 def test_publish_artifact_concurrent_builders_do_not_clobber(tmp_path):
-    """Two _publish_artifact calls racing on the same path must each
+    """Two publish_artifact calls racing on the same path must each
     complete and leave ONE winner's consistent tree (r12 ADVICE: the
     old fixed '.build' sibling let builder B rmtree builder A's
     in-progress scratch).  Build bodies deliberately overlap in time."""
-    from warp_spark.catalog import _publish_artifact
+    from warp_spark.artifacts import publish_artifact
 
     path = str(tmp_path / "art")
     errs: list = []
@@ -192,7 +192,7 @@ def test_publish_artifact_concurrent_builders_do_not_clobber(tmp_path):
             time.sleep(0.3)  # keep both scratch trees alive at once
 
         try:
-            _publish_artifact(path, "_DONE", f"stamp-{tag}", body)
+            publish_artifact(path, "_DONE", f"stamp-{tag}", body)
         except Exception as e:  # pragma: no cover - the failure we pin
             errs.append(e)
 
@@ -209,6 +209,164 @@ def test_publish_artifact_concurrent_builders_do_not_clobber(tmp_path):
     # whichever builder won, its marker and payload are the SAME build
     assert stamp == f"stamp-{payload}"
     assert not [n for n in os.listdir(tmp_path) if ".build." in n or ".trash." in n]
+
+
+def _writer(payload, calls=None):
+    """A build/mutate body writing ``payload`` into the tree's data file."""
+
+    def body(p):
+        if calls is not None:
+            calls.append(p)
+        with open(os.path.join(p, "data"), "w") as f:
+            f.write(payload)
+        return True
+
+    return body
+
+
+def _tree(path):
+    """Every file under ``path`` (marker included) -> its content."""
+    out = {}
+    for d, _, files in os.walk(path):
+        for n in files:
+            with open(os.path.join(d, n)) as f:
+                out[os.path.relpath(os.path.join(d, n), path)] = f.read()
+    return out
+
+
+def _scratch_siblings(tmp_path):
+    return [n for n in os.listdir(tmp_path) if ".build." in n or ".trash." in n]
+
+
+def test_warm_ensure_never_builds_and_keeps_marker_mtime(tmp_path):
+    from warp_spark.artifacts import ensure_artifact
+
+    path, calls = str(tmp_path / "art"), []
+    assert ensure_artifact(path, "_DONE", "s1", _writer("v1", calls)) is True
+    marker = os.path.join(path, "_DONE")
+    os.utime(marker, ns=(1_000_000_000, 1_000_000_000))
+    assert ensure_artifact(path, "_DONE", "s1", _writer("v1", calls)) is False
+    assert len(calls) == 1
+    assert os.stat(marker).st_mtime_ns == 1_000_000_000
+
+
+def test_ensure_rebuild_always_builds(tmp_path):
+    from warp_spark.artifacts import ensure_artifact
+
+    path, calls = str(tmp_path / "art"), []
+    for _ in range(2):
+        assert ensure_artifact(path, "_DONE", "s1", _writer("v1", calls), rebuild=True)
+    assert len(calls) == 2
+    assert _tree(path) == {"data": "v1", "_DONE": "s1\n"}
+
+
+def test_failed_build_leaves_previous_tree_and_marker(tmp_path):
+    from warp_spark.artifacts import ensure_artifact
+
+    path = str(tmp_path / "art")
+    ensure_artifact(path, "_DONE", "s1", _writer("v1"))
+
+    def broken(p):
+        _writer("half")(p)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        ensure_artifact(path, "_DONE", "s2", broken)
+    assert _tree(path) == {"data": "v1", "_DONE": "s1\n"}
+    assert _scratch_siblings(tmp_path) == []
+
+
+def test_crash_after_sentinel_makes_next_ensure_rebuild(tmp_path):
+    """A mutation that dies after the sentinel is written leaves a tree
+    no ensure will reuse: the next ensure rebuilds a tree equal to a
+    fresh build.  The copied base never carries the base's stamp."""
+    from warp_spark.artifacts import (
+        SENTINEL,
+        ensure_artifact,
+        mutate_artifact,
+        read_marker,
+    )
+
+    base, path = str(tmp_path / "base"), str(tmp_path / "art")
+    ensure_artifact(base, "_DONE", "base", _writer("b"))
+    ensure_artifact(path, "_DONE", "s1", _writer("v1"))
+    seen = []
+
+    def crash(p):
+        seen.append(read_marker(p, "_DONE"))
+        _writer("half")(p)
+        raise RuntimeError("crash mid-mutation")
+
+    with pytest.raises(RuntimeError, match="crash mid-mutation"):
+        mutate_artifact(path, "_DONE", "s1+m", crash, base=base)
+    assert seen == [SENTINEL]
+    assert read_marker(path, "_DONE") == SENTINEL
+    assert ensure_artifact(path, "_DONE", "s1", _writer("v1")) is True
+    ref = str(tmp_path / "ref")
+    ensure_artifact(ref, "_DONE", "s1", _writer("v1"))
+    assert _tree(path) == _tree(ref)
+    assert _tree(base) == {"data": "b", "_DONE": "base\n"}
+
+
+def test_refused_mutation_publishes_fallback_under_fallback_stamp(tmp_path):
+    from warp_spark.artifacts import ensure_artifact, mutate_artifact
+
+    base, path = str(tmp_path / "base"), str(tmp_path / "art")
+    ensure_artifact(base, "_DONE", "base", _writer("b"))
+    accepted = mutate_artifact(
+        path,
+        "_DONE",
+        "done",
+        lambda p: False,
+        base=base,
+        fallback=_writer("rebuilt"),
+        fallback_stamp="fell back",
+    )
+    assert accepted is False
+    assert _tree(path) == {"data": "rebuilt", "_DONE": "fell back\n"}
+    assert _scratch_siblings(tmp_path) == []
+    # an accepted mutation of the same base writes the done stamp
+    assert mutate_artifact(path, "_DONE", "done", _writer("m"), base=base) is True
+    assert _tree(path) == {"data": "m", "_DONE": "done\n"}
+
+
+def test_graph_ingest_streamed_restamps_its_copies(spark, tmp_path):
+    """The streamed graph ingest mutates copies of the base pair; its
+    final markers must name the ingested state, never the base's."""
+    import warp_spark.catalog as cat
+    from warp_spark.artifacts import SENTINEL, read_marker
+
+    sf = str(tmp_path / "sf")
+    rows = [
+        (o, p)
+        for o in range(1, 201)
+        for p in {2 * (o % 7), 20 + 2 * (o % 11), 40 + 2 * (o % 5)}
+    ]
+    spark.createDataFrame(rows, "l_orderkey long, l_partkey long").coalesce(
+        1
+    ).write.parquet(f"{sf}/lineitem.parquet")
+    cat.graph_ingest_streamed(spark, sf).collect()
+    base_ep, base_wp = cat._ensure_graph_base(spark, sf, even_only=True)
+    base_stamp = read_marker(base_ep, "_EDGES_COMPLETE")
+    assert read_marker(base_wp, "_WEDGES_COMPLETE") == base_stamp
+    for prefix, marker in (
+        ("warp_graph_edgestr_v1", "_EDGES_COMPLETE"),
+        ("warp_graph_wedgestr_v1", "_WEDGES_COMPLETE"),
+    ):
+        got = read_marker(cat._artifact_path(prefix, sf), marker)
+        assert got not in (None, SENTINEL, base_stamp), (prefix, got)
+
+
+def test_stage_split_files_raises_on_a_key_outside_the_range(spark, tmp_path):
+    """A row whose key is outside 0..n-1 must raise, not vanish with the
+    stage directory (a plain assert would be stripped by python -O)."""
+    from pyspark.sql import functions as F
+
+    from warp_spark.catalog import _stage_split_files
+
+    df = spark.createDataFrame([(0, "a"), (1, "b"), (5, "c")], "k long, v string")
+    with pytest.raises(ValueError, match="outside 0..2"):
+        _stage_split_files(df, str(tmp_path), F.col("k"), ["v"], n=3)
 
 
 def test_delete_from_dedup_index_equals_rebuild_on_remaining(spark, tmp_path):

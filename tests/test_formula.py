@@ -331,3 +331,28 @@ def test_sequencer_dataframe(spark):
     df = sq.sequencer_dataframe(spark, "[a-c][0-1]")
     got = sorted(r["value"] for r in df.collect())
     assert got == ["a0", "a1", "b0", "b1", "c0", "c1"]
+
+
+def test_literals_parse_the_same_under_python_O():
+    """String, blob and list literals consume their opening token
+    unconditionally, so ``python -O`` (which strips asserts) parses
+    them to the same AST."""
+    import os
+    import subprocess
+    import sys
+
+    texts = ['"ab" & "c"', "{1;2}", "`YWI=`", '"x""y"', '{"a";`Yw==`}']
+    code = (
+        "import sys; from warp_spark import formula as f; "
+        "print(repr([f.parse(t) for t in sys.argv[1:]]))"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-O", "-c", code, *texts],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == repr([parse(t) for t in texts])

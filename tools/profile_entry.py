@@ -23,14 +23,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-class JobTimer:
-    """SparkListener-free job timing: poll the status tracker before and
-    after; local mode exposes job start/end via the REST-less status
-    API only coarsely, so instead we wrap actions at the Python layer —
-    good enough to attribute seconds to phases when entries run several
-    actions."""
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")

@@ -41,6 +41,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warp_spark.aggregators import Aggregator
+from warp_spark.artifacts import (
+    ensure_artifact,
+    memo_stamp,
+    mutate_artifact,
+    publish_artifact,
+    read_marker,
+)
 from warp_spark.dataset import Dataset, Order
 from warp_spark.functions import call
 from warp_spark.localdf import small_rows_df
@@ -5134,7 +5141,10 @@ def _stage_split_files(
         for d in _glob.glob(f"{root}/stage/__b=*")
         if os.path.basename(d) not in {f"__b={i}" for i in range(n)}
     ]
-    assert not stray, f"_stage_split_files: key produced rows outside 0..{n-1}: {stray}"
+    if stray:
+        raise ValueError(
+            f"_stage_split_files: key produced rows outside 0..{n-1}: {stray}"
+        )
     shutil.rmtree(f"{root}/stage", ignore_errors=True)
 
 
@@ -6806,103 +6816,19 @@ def _artifact_path(prefix: str, sf_dir: str) -> str:
     )
 
 
-def _source_stat_sig(src: str) -> tuple:
-    """File-stat signature of a parquet dataset used to memoize the
-    content-fingerprint SCAN: stats the part files INSIDE the dataset
-    directory, not just the top-level path (r11 ADVICE — an in-place
-    rewrite of a part file changes neither the directory's mtime nor
-    its size, so the old top-level stat could reuse a stale stamp)."""
-    import glob as _glob
-    import os
-
-    if os.path.isfile(src):
-        files = [src]
-    else:
-        files = sorted(
-            _glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
-        ) or [src]
-    sig = []
-    for f in files:
-        # single stat per file; a part file deleted between glob and
-        # stat (concurrent rewrite) becomes a sentinel entry, so the
-        # signature MISMATCHES and the caller rebuilds — instead of a
-        # FileNotFoundError escaping every ensure helper (r12 ADVICE)
-        try:
-            st = os.stat(f)
-            sig.append((f, st.st_mtime_ns, st.st_size))
-        except FileNotFoundError:
-            sig.append((f, -1, -1))
-    return tuple(sig)
-
-
-_CONTENT_STAMP_CACHE: dict = {}
-
-
-def _memo_stamp(key: str, src: str, compute) -> str:
-    """Memoize a content-fingerprint STAMP per (key, source file-stat
-    signature) within the process — the _GRAPH_EDGES_FP_CACHE /
-    _TDIGEST_FP_CACHE pattern generalized (r14, guide §1.2): the
-    fingerprint scan is the honesty mechanism that detects source
-    changes, but re-running it on every entry invocation re-pays a
-    full source scan for an answer that cannot have changed while the
-    part files' stat signature is identical.  ``compute()`` runs the
-    actual fingerprint aggregation and returns the stamp string; it
-    re-runs exactly when a part file under ``src`` changes (mtime or
-    size — _source_stat_sig stats the files INSIDE the dataset, r11
-    ADVICE).  Never caches across processes: a fresh bench/driver run
-    always fingerprints once."""
-    stat_sig = _source_stat_sig(src)
-    cached = _CONTENT_STAMP_CACHE.get(key)
-    if cached is not None and cached[0] == stat_sig:
-        return cached[1]
-    stamp = compute()
-    _CONTENT_STAMP_CACHE[key] = (stat_sig, stamp)
-    return stamp
-
-
-def _publish_artifact(path: str, marker_name: str, stamp: str, build_fn) -> None:
-    """Race-proof artifact rebuild (r11 ADVICE): build into a UNIQUE
-    sibling scratch directory — the completion marker is written LAST,
-    inside it — then swap into place under an exclusive flock, so a
-    concurrent prober never observes a half-built directory and two
-    concurrent builders never clobber each other's in-progress tree
-    (r12 ADVICE: the old fixed ``.build`` sibling was shared).
-    ``build_fn(tmp_path)`` performs the Spark writes.  The swap itself
-    is the repo-wide ``swap_artifact_dir`` discipline (artifacts.py),
-    shared with the pipeline compaction finishers."""
-    import os
-    import shutil
-
-    from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
-
-    tmp = unique_sibling_tmp(path, tag="build")
-    try:
-        build_fn(tmp)
-        with open(os.path.join(tmp, marker_name), "w") as f:
-            f.write(stamp + "\n")
-        swap_artifact_dir(path, tmp)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-
-
 def _dedup_index_path(sf_dir: str) -> str:
     return _artifact_path("warp_dedup_idx_v1", sf_dir)
 
 
 def _ensure_dedup_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
-    """Build-once discipline for the persisted near-dup corpus index
-    (r10 verdict item 5 — completes the index triple: vector IVF-PQ,
-    lexical BM25, dedup minhash bands).  Corpus = the standing slice
-    (doc_id % 20 < 16, the dedup_incremental convention).  The stamp
-    carries a content fingerprint (doc_id sum + crc32-of-text sum),
-    so same-cardinality content changes rebuild."""
-    import os
-
+    """The persisted near-dup corpus index (r10 verdict item 5 —
+    completes the index triple: vector IVF-PQ, lexical BM25, dedup
+    minhash bands) over the standing slice (doc_id % 20 < 16, the
+    dedup_incremental convention).  Fingerprint: doc_id sum +
+    crc32-of-text sum."""
     from warp_spark.pipeline.dedup import persist_dedup_index
 
     path = _dedup_index_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     corpus = (
         _t(spark, sf_dir, "documents").to_df().filter(F.col("doc_id") % 20 < 16)
     )
@@ -6918,20 +6844,14 @@ def _ensure_dedup_index(spark: SparkSession, sf_dir: str, rebuild: bool = False)
             f"n_docs={fp['n']} idsum={fp['ids']} crcsum={fp['crc']}"
         )
 
-    stamp = _memo_stamp(
-        f"dedup_idx:{sf_dir}", f"{sf_dir}/documents.parquet", _fp
+    stamp = memo_stamp(f"dedup_idx:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    ensure_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        stamp,
+        lambda tmp: persist_dedup_index(corpus, tmp),
+        rebuild,
     )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            stamp,
-            lambda tmp: persist_dedup_index(corpus, tmp),
-        )
     return path
 
 
@@ -7029,24 +6949,15 @@ def _ensure_dedup_index_appended(spark: SparkSession, sf_dir: str) -> str:
     append_dedup_index — after the append the artifact covers exactly
     the standing corpus (doc_id % 20 < 16) that _ensure_dedup_index
     builds in one shot, so probing it must reproduce the one-shot
-    index's answers (that equality IS the entry's oracle).  Content-
-    stamp reuse like every other ensure helper: the final stamp
+    index's answers (that equality IS the entry's oracle).  The stamp
     fingerprints BOTH the base corpus and the appended slice, so the
-    append path re-runs exactly when the source content changes and
-    probes ride the artifact otherwise.  Marker discipline: the marker
-    is set to an 'appending' sentinel BEFORE the in-place append and
-    to the final stamp only after it completes — a mid-append crash
-    leaves the sentinel, which never matches, forcing a clean rebuild
-    instead of a double-append.  If append_dedup_index cannot
-    guarantee append ≡ rebuild (cap crossing), it degrades to the
-    one-shot build over the full standing corpus — correctness is
-    never conditional on the fast path."""
-    import os
-
+    append re-runs exactly when either changes.  If
+    append_dedup_index cannot guarantee append ≡ rebuild (cap
+    crossing), the fallback is the one-shot build over the full
+    standing corpus."""
     from warp_spark.pipeline.dedup import append_dedup_index, persist_dedup_index
 
     path = _dedup_append_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     docs = _t(spark, sf_dir, "documents").to_df()
     base = docs.filter(F.col("doc_id") % 20 < 12)
     slice_ = docs.filter((F.col("doc_id") % 20 >= 12) & (F.col("doc_id") % 20 < 16))
@@ -7074,37 +6985,24 @@ def _ensure_dedup_index_appended(spark: SparkSession, sf_dir: str) -> str:
             f"+ appended n={fp['ns']} id={fp['ids']} crc={fp['crcs']}"
         )
 
-    stamp = _memo_stamp(
-        f"dedup_app:{sf_dir}", f"{sf_dir}/documents.parquet", _fp
-    )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if current == stamp:
+    stamp = memo_stamp(f"dedup_app:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    if read_marker(path, "_INDEX_COMPLETE") == stamp:
         return path
-    _publish_artifact(
+    publish_artifact(
         path,
         "_INDEX_COMPLETE",
         "dedupapp base only",
         lambda tmp: persist_dedup_index(base, tmp),
     )
-    with open(marker, "w") as f:
-        f.write("appending\n")
-    if not append_dedup_index(spark, path, slice_):
-        # cap crossed or shape drift: the safe path is the one-shot
-        # rebuild over the full standing corpus
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            stamp,
-            lambda tmp: persist_dedup_index(
-                docs.filter(F.col("doc_id") % 20 < 16), tmp
-            ),
-        )
-        return path
-    with open(marker, "w") as f:
-        f.write(stamp + "\n")
+    mutate_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        stamp,
+        lambda p: append_dedup_index(spark, p, slice_),
+        fallback=lambda tmp: persist_dedup_index(
+            docs.filter(F.col("doc_id") % 20 < 16), tmp
+        ),
+    )
     return path
 
 
@@ -7183,12 +7081,9 @@ def _ensure_dedup_base12(spark: SparkSession, sf_dir: str) -> str:
     entry copies this artifact (a small file-tree copy) and mutates
     the COPY, so re-running the stream costs the ingest itself, never
     a base re-signature."""
-    import os
-
     from warp_spark.pipeline.dedup import persist_dedup_index
 
     path = _artifact_path("warp_dedup_base12_v1", sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     base = _t(spark, sf_dir, "documents").to_df().filter(F.col("doc_id") % 20 < 12)
 
     def _fp() -> str:
@@ -7198,17 +7093,12 @@ def _ensure_dedup_base12(spark: SparkSession, sf_dir: str) -> str:
         ).first()
         return f"dedup base12 n={fp['n']} crc={fp['crc']}"
 
-    stamp = _memo_stamp(
+    stamp = memo_stamp(
         f"dedup_base12:{sf_dir}", f"{sf_dir}/documents.parquet", _fp
     )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if current != stamp:
-        _publish_artifact(
-            path, "_INDEX_COMPLETE", stamp, lambda tmp: persist_dedup_index(base, tmp)
-        )
+    ensure_artifact(
+        path, "_INDEX_COMPLETE", stamp, lambda tmp: persist_dedup_index(base, tmp)
+    )
     return path
 
 
@@ -7227,83 +7117,66 @@ def _ensure_dedup_base12(spark: SparkSession, sf_dir: str) -> str:
 # the state store — nothing O(corpus) in streaming state.
 @register("dedup_index_append_streamed", None)
 def dedup_index_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import os
     import shutil
     import tempfile
 
-    from warp_spark.pipeline.dedup import append_dedup_index, dedup_index_probe
+    from warp_spark.pipeline.dedup import (
+        append_dedup_index,
+        dedup_index_probe,
+        persist_dedup_index,
+    )
 
     docs = _t(spark, sf_dir, "documents").to_df()
     slice_ = docs.filter((F.col("doc_id") % 20 >= 12) & (F.col("doc_id") % 20 < 16))
     batch = docs.filter(F.col("doc_id") % 20 >= 16)
+
+    def ingest_stream(path: str) -> bool:
+        # mirrors _ensure_dedup_index_appended's degrade contract (r12
+        # ADVICE): once append_dedup_index refuses a trigger's batch
+        # (cap crossed / shape drift), remaining triggers stop
+        # appending and the drain falls through to the rebuild
+        degraded = False
+
+        def ingest(bdf, batch_id):
+            nonlocal degraded
+            if not degraded and not bdf.isEmpty():
+                degraded = not append_dedup_index(spark, path, bdf)
+
+        root = tempfile.mkdtemp(prefix="warp_idx_ingest_stream_")
+        try:
+            # ONE slice pass stages all three trigger files (previously
+            # three filter+coalesce(1) writes, each re-scanning documents)
+            _stage_split_files(
+                slice_, root, F.col("doc_id") % 3, ["doc_id", "text"]
+            )
+            stream = (
+                spark.readStream.schema("doc_id bigint, text string")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(root)
+            )
+            q = stream.writeStream.foreachBatch(ingest).start()
+            q.processAllAvailable()
+            q.stop()
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+        return not degraded
+
     # the streamed demonstration re-ingests every run (like every other
     # streamed entry, which replays its stream per run) — but it
     # mutates a CHEAP COPY of the stamp-reused base artifact, so the
     # per-run cost is the ingest, never a base re-signature
-    base_path = _ensure_dedup_base12(spark, sf_dir)
     path = _artifact_path("warp_dedup_idxstr_v1", sf_dir)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    shutil.copytree(base_path, path)
-    with open(os.path.join(path, "_INDEX_COMPLETE"), "w") as f:
-        f.write("ingesting\n")
-    root = tempfile.mkdtemp(prefix="warp_idx_ingest_stream_")
-    try:
-        # ONE slice pass stages all three trigger files (previously
-        # three filter+coalesce(1) writes, each re-scanning documents)
-        _stage_split_files(
-            slice_, root, F.col("doc_id") % 3, ["doc_id", "text"]
-        )
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-        )
-
-        # mirrors _ensure_dedup_index_appended's degrade contract (r12
-        # ADVICE): if append_dedup_index refuses a trigger's batch (cap
-        # crossed / shape drift), remaining triggers stop appending and
-        # the drain falls through to a one-shot rebuild over the full
-        # standing slice — correctness is never conditional on the
-        # fast path, in the streamed leg too
-        degraded = {"flag": False}
-
-        def ingest(bdf, batch_id):
-            if degraded["flag"] or bdf.isEmpty():
-                return
-            if not append_dedup_index(spark, path, bdf):
-                degraded["flag"] = True
-
-        q = stream.writeStream.foreachBatch(ingest).start()
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    if degraded["flag"]:
-        from warp_spark.pipeline.dedup import persist_dedup_index
-
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "dedupstr rebuilt (append degraded mid-stream)",
-            lambda tmp: persist_dedup_index(
-                docs.filter(F.col("doc_id") % 20 < 16), tmp
-            ),
-        )
-        hits = dedup_index_probe(spark, path, batch, threshold=0.5)
-        return (
-            batch.select("doc_id")
-            .join(hits, F.col("doc_id") == F.col("batch_id"), "left")
-            .select(
-                "doc_id",
-                "dup_of",
-                "best_jaccard",
-                F.col("dup_of").isNotNull().alias("is_dup"),
-            )
-        )
-    with open(os.path.join(path, "_INDEX_COMPLETE"), "w") as f:
-        f.write("dedupstr base + streamed 12..15\n")
+    mutate_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        "dedupstr base + streamed 12..15",
+        ingest_stream,
+        base=_ensure_dedup_base12(spark, sf_dir),
+        fallback=lambda tmp: persist_dedup_index(
+            docs.filter(F.col("doc_id") % 20 < 16), tmp
+        ),
+        fallback_stamp="dedupstr rebuilt (append degraded mid-stream)",
+    )
     hits = dedup_index_probe(spark, path, batch, threshold=0.5)
     return (
         batch.select("doc_id")
@@ -7327,9 +7200,8 @@ ORACLES["dedup_index_append_streamed"] = ORACLES["dedup_incremental"]
 # day's slice, verify the artifact is current, re-cluster the small
 # files, serve) demonstrated as one plan rather than four separate
 # entries.  Each leg keeps its standing contract: the append refuses
-# re-delivered ids and cap crossings (one-shot rebuild fallback), the
-# staleness check is the marker-vs-content-stamp discipline every
-# ensure helper uses, compaction is content-preserving under the
+# re-delivered ids and cap crossings, a stale doc count also falls
+# back to the one-shot rebuild, compaction is content-preserving under the
 # shared flock-guarded swap, and the final probe must reproduce
 # dedup_incremental bit-for-bit (oracle by reference) — so a fault in
 # ANY leg of the loop hash-fails the gate.
@@ -7337,7 +7209,6 @@ ORACLES["dedup_index_append_streamed"] = ORACLES["dedup_incremental"]
 def dedup_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import os
-    import shutil
 
     from warp_spark.pipeline.dedup import (
         append_dedup_index,
@@ -7349,55 +7220,43 @@ def dedup_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").to_df()
     slice_ = docs.filter((F.col("doc_id") % 20 >= 12) & (F.col("doc_id") % 20 < 16))
     batch = docs.filter(F.col("doc_id") % 20 >= 16)
+
+    def maintain(path: str) -> bool:
+        # 1) APPEND the day's slice (a refusal falls back to the rebuild)
+        if not append_dedup_index(spark, path, slice_):
+            return False
+        # 2) STALENESS CHECK: the maintained artifact must now cover the
+        # standing corpus — its doc count is the cheap invariant a nightly
+        # job asserts before serving (a full content re-stamp would re-pay
+        # the corpus scan the append path exists to avoid)
+        n_index = int(spark.read.parquet(f"{path}/stats").first()["n_docs"])
+        if n_index != docs.filter(F.col("doc_id") % 20 < 16).count():
+            return False
+        # 3) COMPACT the append-grown layout back to one file per bucket
+        bands = os.path.join(path, "bands", "**", "*.parquet")
+        n_files_before = len(_glob.glob(bands, recursive=True))
+        compact_dedup_index(spark, path)
+        n_files_after = len(_glob.glob(bands, recursive=True))
+        if n_files_after > n_files_before:  # compaction must never grow files
+            raise RuntimeError(
+                f"compaction grew the index: {n_files_before} -> {n_files_after}"
+            )
+        return True
+
     # the lifecycle re-runs every invocation (like the streamed ingest)
     # over a cheap copy of the stamp-reused base-12 artifact
-    base_path = _ensure_dedup_base12(spark, sf_dir)
     path = _artifact_path("warp_dedup_idxlife_v1", sf_dir)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    shutil.copytree(base_path, path)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
-    with open(marker, "w") as f:
-        f.write("maintaining\n")
-    # 1) APPEND the day's slice (honest fallback on refusal)
-    if not append_dedup_index(spark, path, slice_):
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "lifecycle rebuilt (append refused)",
-            lambda tmp: persist_dedup_index(
-                docs.filter(F.col("doc_id") % 20 < 16), tmp
-            ),
-        )
-    # 2) STALENESS CHECK: the maintained artifact must now cover the
-    # standing corpus — its doc count is the cheap invariant a nightly
-    # job asserts before serving (a full content re-stamp would re-pay
-    # the corpus scan the append path exists to avoid)
-    n_index = int(spark.read.parquet(f"{path}/stats").first()["n_docs"])
-    n_corpus = docs.filter(F.col("doc_id") % 20 < 16).count()
-    if n_index != n_corpus:  # stale: the honest path is the rebuild
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "lifecycle rebuilt (stale count)",
-            lambda tmp: persist_dedup_index(
-                docs.filter(F.col("doc_id") % 20 < 16), tmp
-            ),
-        )
-    # 3) COMPACT the append-grown layout back to one file per bucket
-    n_files_before = len(
-        _glob.glob(os.path.join(path, "bands", "**", "*.parquet"), recursive=True)
+    mutate_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        "lifecycle base-12 + appended 12..15, compacted",
+        maintain,
+        base=_ensure_dedup_base12(spark, sf_dir),
+        fallback=lambda tmp: persist_dedup_index(
+            docs.filter(F.col("doc_id") % 20 < 16), tmp
+        ),
+        fallback_stamp="lifecycle rebuilt (append refused or stale count)",
     )
-    compact_dedup_index(spark, path)
-    n_files_after = len(
-        _glob.glob(os.path.join(path, "bands", "**", "*.parquet"), recursive=True)
-    )
-    if n_files_after > n_files_before:  # compaction must never grow files
-        raise RuntimeError(
-            f"compaction grew the index: {n_files_before} -> {n_files_after}"
-        )
-    with open(marker, "w") as f:
-        f.write("lifecycle base-12 + appended 12..15, compacted\n")
     # 4) PROBE: serve the incoming batch from the maintained index
     hits = dedup_index_probe(spark, path, batch, threshold=0.5)
     return (
@@ -7457,9 +7316,6 @@ WHERE d.doc_id % 20 >= 16
 """,
 )
 def dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from warp_spark.pipeline.dedup import (
         delete_from_dedup_index,
         dedup_index_probe,
@@ -7472,29 +7328,21 @@ def dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     batch = docs.filter(F.col("doc_id") % 20 >= 16)
     # the deletion re-runs every invocation over a cheap copy of the
-    # stamp-reused standing index (the streamed-ingest discipline)
-    std_path = _ensure_dedup_index(spark, sf_dir)
+    # stamp-reused standing index (the streamed-ingest discipline); a
+    # refusal (shape drift / cap drop / id-text mismatch) falls back to
+    # the rebuild over the remaining corpus
     path = _artifact_path("warp_dedup_idxdel_v1", sf_dir)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    shutil.copytree(std_path, path)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
-    with open(marker, "w") as f:
-        f.write("deleting\n")
-    if not delete_from_dedup_index(spark, path, del_docs):
-        # refusal (shape drift / cap drop / id-text mismatch): the
-        # honest path is the rebuild over the remaining corpus
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "delete rebuilt (refused)",
-            lambda tmp: persist_dedup_index(
-                docs.filter(F.col("doc_id") % 20 < 12), tmp
-            ),
-        )
-    else:
-        with open(marker, "w") as f:
-            f.write("standing minus 12..15 (deleted)\n")
+    mutate_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        "standing minus 12..15 (deleted)",
+        lambda p: delete_from_dedup_index(spark, p, del_docs),
+        base=_ensure_dedup_index(spark, sf_dir),
+        fallback=lambda tmp: persist_dedup_index(
+            docs.filter(F.col("doc_id") % 20 < 12), tmp
+        ),
+        fallback_stamp="delete rebuilt (refused)",
+    )
     hits = dedup_index_probe(spark, path, batch, threshold=0.5)
     return (
         batch.select("doc_id")
@@ -10602,17 +10450,12 @@ def _ann_index_path(sf_dir: str) -> str:
 
 
 def _ensure_ann_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
-    """Build-once discipline for the persisted IVF-PQ index: the probe
-    entry loads whatever the marker certifies; persist (or a corpus
-    change, detected via the recorded vector count) rebuilds.  Training
-    is deterministic, so a rebuild yields byte-identical artifacts —
-    entry order between persist and probe cannot change results."""
-    import os
-
+    """The persisted IVF-PQ index.  Training is deterministic, so a
+    rebuild yields byte-identical artifacts — entry order between
+    persist and probe cannot change results."""
     from warp_spark.pipeline.similarity import persist_ivfpq_index
 
     path = _ann_index_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     emb = _t(spark, sf_dir, "embeddings").to_df()
     # content fingerprint, not just cardinality (r10 ADVICE, applied to
     # the precedent too): vec_id sum + crc32 over the rendered vector.
@@ -10629,22 +10472,14 @@ def _ensure_ann_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -
             f"n_vectors={fp['n']} idsum={fp['ids']} crcsum={fp['crc']}"
         )
 
-    stamp = _memo_stamp(
-        f"ann_idx:{sf_dir}", f"{sf_dir}/embeddings.parquet", _fp
+    stamp = memo_stamp(f"ann_idx:{sf_dir}", f"{sf_dir}/embeddings.parquet", _fp)
+    ensure_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        stamp,
+        lambda tmp: persist_ivfpq_index(emb, tmp, n_centroids=16, m=16, n_codes=32),
+        rebuild,
     )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            stamp,
-            lambda tmp: persist_ivfpq_index(
-                emb, tmp, n_centroids=16, m=16, n_codes=32
-            ),
-        )
     return path
 
 
@@ -10802,17 +10637,16 @@ def _ensure_ann_index_appended(spark: SparkSession, sf_dir: str) -> str:
     Faiss train-then-add pattern.  The appended index covers the full
     corpus under the base-trained model, byte-equal to a frozen-model
     rebuild (pytest-pinned); the entry's driver contract is the ANN
-    tier's recall floor vs exact brute force over the FULL corpus.
-    Same stamp/sentinel discipline as the other append twins."""
-    import os
-
+    tier's recall floor vs exact brute force over the FULL corpus.  A
+    refused append (the slice re-delivers indexed ids) falls back to a
+    rebuild over the full corpus with the model still trained on the
+    base slice, preserving the frozen-model byte-equality contract."""
     from warp_spark.pipeline.similarity import (
         append_ivfpq_index,
         persist_ivfpq_index,
     )
 
     path = _ann_append_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     emb = _t(spark, sf_dir, "embeddings").to_df()
     is_base = F.col("vec_id") % 5 != 4
 
@@ -10836,42 +10670,25 @@ def _ensure_ann_index_appended(spark: SparkSession, sf_dir: str) -> str:
             f"+ appended n={fp['ns']} crc={fp['crcs']}"
         )
 
-    stamp = _memo_stamp(
-        f"ann_app:{sf_dir}", f"{sf_dir}/embeddings.parquet", _fp
-    )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if current == stamp:
+    stamp = memo_stamp(f"ann_app:{sf_dir}", f"{sf_dir}/embeddings.parquet", _fp)
+    if read_marker(path, "_INDEX_COMPLETE") == stamp:
         return path
     base = emb.filter(is_base)
-    _publish_artifact(
+    publish_artifact(
         path,
         "_INDEX_COMPLETE",
         "annapp base only",
-        lambda tmp: persist_ivfpq_index(
-            base, tmp, n_centroids=16, m=16, n_codes=32
+        lambda tmp: persist_ivfpq_index(base, tmp, n_centroids=16, m=16, n_codes=32),
+    )
+    mutate_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        stamp,
+        lambda p: append_ivfpq_index(spark, p, emb.filter(~is_base)),
+        fallback=lambda tmp: persist_ivfpq_index(
+            emb, tmp, n_centroids=16, m=16, n_codes=32, train_df=base
         ),
     )
-    with open(marker, "w") as f:
-        f.write("appending\n")
-    if not append_ivfpq_index(spark, path, emb.filter(~is_base)):
-        # precondition refused (slice re-delivers indexed ids): rebuild
-        # over the full corpus with the model still trained on the
-        # base slice, preserving the frozen-model byte-equality
-        # contract — correctness is never conditional on the fast path
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            stamp,
-            lambda tmp: persist_ivfpq_index(
-                emb, tmp, n_centroids=16, m=16, n_codes=32, train_df=base
-            ),
-        )
-        return path
-    with open(marker, "w") as f:
-        f.write(stamp + "\n")
     return path
 
 
@@ -11561,55 +11378,36 @@ def _tdigest_path(sf_dir: str) -> str:
     return _artifact_path("warp_tdigest_v1", sf_dir)
 
 
-_TDIGEST_FP_CACHE: dict = {}
-
-
 def _ensure_tdigest(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
-    """Build-once discipline for the persisted quantile sketch (r11
-    verdict item 8 — the index-triple pattern applied to quantiles):
-    the mergeable log-linear value histogram over lineitem price cents
+    """The persisted quantile sketch (r11 verdict item 8 — the
+    index-triple pattern applied to quantiles): the mergeable
+    log-linear value histogram over lineitem price cents
     (sketches.py::tdigest_hist, the SAME stage-1 state the batch and
     streamed t-digest entries compute in-query) written ONCE as a tiny
     parquet artifact, so every percentile read-off is a scan of a few
-    hundred bucket rows instead of a source pass.  Content stamp =
-    row count + exact cents sum; the fingerprint SCAN is memoized per
-    (sf_dir, part-file stat signature) like the edge artifact's, so
-    repeated probes in one session pay zero lineitem scans."""
-    import os
-
+    hundred bucket rows instead of a source pass.  Fingerprint: row
+    count + exact cents sum."""
     from warp_spark.sketches import tdigest_hist
 
-    path = _tdigest_path(sf_dir)
-    marker = os.path.join(path, "_SKETCH_COMPLETE")
     li = _t(spark, sf_dir, "lineitem").to_df()
     cents = F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5)).cast(
         "long"
     )
-    stat_sig = _source_stat_sig(f"{sf_dir}/lineitem.parquet")
-    cached = _TDIGEST_FP_CACHE.get(sf_dir)
-    if cached is not None and cached[0] == stat_sig:
-        stamp = cached[1]
-    else:
+
+    def _fp() -> str:
         fp = li.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(cents.cast("decimal(38,0)")).alias("s"),
         ).first()
-        stamp = (
-            f"tdigest sub_bits=7 group=l_returnflag n={fp['n']} centssum={fp['s']}"
-        )
-        _TDIGEST_FP_CACHE[sf_dir] = (stat_sig, stamp)
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
+        return f"tdigest sub_bits=7 group=l_returnflag n={fp['n']} centssum={fp['s']}"
+
+    def build(tmp: str) -> None:
         hist = tdigest_hist(li, cents, "l_returnflag", value_sub_bits=7)
-        _publish_artifact(
-            path,
-            "_SKETCH_COMPLETE",
-            stamp,
-            lambda tmp: hist.coalesce(1).write.mode("overwrite").parquet(tmp),
-        )
+        hist.coalesce(1).write.mode("overwrite").parquet(tmp)
+
+    path = _tdigest_path(sf_dir)
+    stamp = memo_stamp(f"tdigest:{sf_dir}", f"{sf_dir}/lineitem.parquet", _fp)
+    ensure_artifact(path, "_SKETCH_COMPLETE", stamp, build, rebuild)
     return path
 
 
@@ -12100,40 +11898,21 @@ def _graph_edges_path(sf_dir: str) -> str:
     return _artifact_path("warp_graph_edges_v1", sf_dir)
 
 
-_GRAPH_EDGES_FP_CACHE: dict = {}
-
-
 def _ensure_graph_edges(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
-    """Build-once discipline for the persisted part co-purchase edge
-    list (r10 verdict item 4): six graph entries (pagerank, triangles,
-    jaccard ×2, assortativity, k-core, degree profile) share this
-    graph, and before this artifact each re-ran the lineitem self-join
-    + distinct in-query.  The staleness stamp carries a CONTENT
-    fingerprint of the source columns (row count + an exact decimal
-    key-combination sum), not just a row count, so a content change at
-    unchanged cardinality rebuilds — the discipline the r10 ADVICE
-    asked for on the BM25 stamp.  The fingerprint SCAN itself is
-    memoized per (sf_dir, file stat signature) within the process, so
-    the seven graph entries sharing the artifact pay it once per
-    session, not once per query.  The stat signature covers the PART
-    FILES inside the dataset directory (r11 ADVICE: an in-place part
-    rewrite changes neither the directory's mtime nor its size), so
-    any writer that touches a data file re-scans."""
-    import os
-
+    """The persisted part co-purchase edge list (r10 verdict item 4):
+    six graph entries (pagerank, triangles, jaccard ×2, assortativity,
+    k-core, degree profile) share this graph, and before this artifact
+    each re-ran the lineitem self-join + distinct in-query.
+    Fingerprint: row count + an exact decimal key-combination sum, so a
+    content change at unchanged cardinality rebuilds; memoised, the
+    graph entries sharing the artifact pay it once per session."""
     from warp_spark.pipeline.graph import persist_edges
 
-    path = _graph_edges_path(sf_dir)
-    marker = os.path.join(path, "_EDGES_COMPLETE")
-    stat_sig = _source_stat_sig(f"{sf_dir}/lineitem.parquet")
-    cached = _GRAPH_EDGES_FP_CACHE.get(sf_dir)
-    if cached is not None and cached[0] == stat_sig:
-        stamp = cached[1]
-    else:
-        li = _t(spark, sf_dir, "lineitem").to_df().select(
-            "l_orderkey", "l_partkey"
-        )
-        fp = li.agg(
+    def lineitem() -> DataFrame:
+        return _t(spark, sf_dir, "lineitem").to_df().select("l_orderkey", "l_partkey")
+
+    def _fp() -> str:
+        fp = lineitem().agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
                 (
@@ -12142,27 +11921,17 @@ def _ensure_graph_edges(spark: SparkSession, sf_dir: str, rebuild: bool = False)
                 )
             ).alias("s"),
         ).first()
-        stamp = f"copurchase canonical n_rows={fp['n']} keysum={fp['s']}"
-        _GRAPH_EDGES_FP_CACHE[sf_dir] = (stat_sig, stamp)
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        src_li = _t(spark, sf_dir, "lineitem").to_df().select(
-            "l_orderkey", "l_partkey"
-        )
-        other = src_li.select(
-            F.col("l_orderkey"), F.col("l_partkey").alias("dst")
-        )
-        edges = (
-            src_li.join(other, "l_orderkey")
-            .where(F.col("l_partkey") < F.col("dst"))
-            .select(F.col("l_partkey").alias("src"), "dst")
-        )
-        _publish_artifact(
-            path, "_EDGES_COMPLETE", stamp, lambda tmp: persist_edges(edges, tmp)
-        )
+        return f"copurchase canonical n_rows={fp['n']} keysum={fp['s']}"
+
+    path = _graph_edges_path(sf_dir)
+    stamp = memo_stamp(f"graph_edges:{sf_dir}", f"{sf_dir}/lineitem.parquet", _fp)
+    ensure_artifact(
+        path,
+        "_EDGES_COMPLETE",
+        stamp,
+        lambda tmp: persist_edges(_copurchase_order_edges(lineitem()), tmp),
+        rebuild,
+    )
     return path
 
 
@@ -12172,48 +11941,41 @@ def _ensure_graph_edges(spark: SparkSession, sf_dir: str, rebuild: bool = False)
 _GRAPH_WEDGE_CAP = 120
 
 
+def _persist_capped_census(spark: SparkSession, edge_path: str, tmp: str) -> None:
+    """Write the cap-120 wedge census of the edge artifact at
+    ``edge_path`` into ``tmp`` (the build of every wedge artifact)."""
+    from warp_spark.pipeline.graph import load_edges, persist_wedge_census
+
+    persist_wedge_census(
+        load_edges(spark, edge_path),
+        tmp,
+        max_center_degree=_GRAPH_WEDGE_CAP,
+        assume_canonical=True,
+    )
+
+
 def _graph_wedges_path(sf_dir: str) -> str:
     return _artifact_path("warp_graph_wedges_v1", sf_dir)
 
 
 def _ensure_graph_wedges(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
-    """Build-once discipline for the persisted capped WEDGE CENSUS
-    (r11 verdict item 2): both capped link-prediction scorers (Jaccard
-    and Resource-Allocation) consume the identical cap-120 census, and
-    before this artifact each entry re-paid the same quadratic wedge
-    self-join from the edge artifact.  One census pass now writes
-    (x, y, cn, ra_ppm) once — the graph_edges_persist amortization
-    applied one level up.  The staleness stamp CHAINS the edge
-    artifact's content-fingerprint stamp, so a lineitem content change
-    propagates edge rebuild → wedge rebuild with no extra source
-    scan."""
-    import os
-
-    from warp_spark.pipeline.graph import load_edges, persist_wedge_census
-
+    """The persisted capped WEDGE CENSUS (r11 verdict item 2): both
+    capped link-prediction scorers (Jaccard and Resource-Allocation)
+    consume the identical cap-120 census, and before this artifact each
+    entry re-paid the same quadratic wedge self-join from the edge
+    artifact.  One census pass now writes (x, y, cn, ra_ppm) once — the
+    graph_edges_persist amortization applied one level up.  The stamp
+    chains the edge artifact's."""
     edge_path = _ensure_graph_edges(spark, sf_dir)
-    with open(os.path.join(edge_path, "_EDGES_COMPLETE")) as f:
-        edge_stamp = f.read().strip()
+    edge_stamp = read_marker(edge_path, "_EDGES_COMPLETE")
     path = _graph_wedges_path(sf_dir)
-    marker = os.path.join(path, "_WEDGES_COMPLETE")
-    stamp = f"wedges cap={_GRAPH_WEDGE_CAP} over [{edge_stamp}]"
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        edges = load_edges(spark, edge_path)
-        _publish_artifact(
-            path,
-            "_WEDGES_COMPLETE",
-            stamp,
-            lambda tmp: persist_wedge_census(
-                edges,
-                tmp,
-                max_center_degree=_GRAPH_WEDGE_CAP,
-                assume_canonical=True,
-            ),
-        )
+    ensure_artifact(
+        path,
+        "_WEDGES_COMPLETE",
+        f"wedges cap={_GRAPH_WEDGE_CAP} over [{edge_stamp}]",
+        lambda tmp: _persist_capped_census(spark, edge_path, tmp),
+        rebuild,
+    )
     return path
 
 
@@ -12360,8 +12122,8 @@ def _ensure_graph_base(
     (batch twin: _ensure_graph_append_demo; streamed twin:
     graph_ingest_streamed).  Both twins COPY these trees and mutate
     the copies, so re-running either costs the ingest itself, never a
-    base rebuild (the _ensure_dedup_base12 discipline).  Staleness
-    chains the standing edge artifact's content stamp.
+    base rebuild (the _ensure_dedup_base12 discipline).  The stamp
+    chains the standing edge artifact's.
 
     ``even_only`` restricts the graph to the induced subgraph of
     EVEN-numbered parts — the streamed twin's bounded domain (the
@@ -12369,45 +12131,29 @@ def _ensure_graph_base(
     an index-sized rewrite, and the per-trigger streaming demo re-pays
     it EVERY run, so it runs on the ~1/4-size domain while the
     stamp-reused batch twin covers the full graph."""
-    import os
+    from warp_spark.pipeline.graph import persist_edges
 
-    from warp_spark.pipeline.graph import load_edges, persist_edges, persist_wedge_census
-
-    std_edge_path = _ensure_graph_edges(spark, sf_dir)
-    with open(os.path.join(std_edge_path, "_EDGES_COMPLETE")) as f:
-        edge_stamp = f.read().strip()
+    edge_stamp = read_marker(_ensure_graph_edges(spark, sf_dir), "_EDGES_COMPLETE")
     tag = "baseeven" if even_only else "base"
     ep = _artifact_path(f"warp_graph_{tag}e_v2", sf_dir)
     wp = _artifact_path(f"warp_graph_{tag}w_v2", sf_dir)
     stamp = f"graph {tag}-main cap={_GRAPH_WEDGE_CAP} over [{edge_stamp}]"
 
-    def current(p, name):
-        m = os.path.join(p, name)
-        if os.path.exists(m):
-            with open(m) as f:
-                return f.read().strip()
-        return None
-
-    if current(ep, "_EDGES_COMPLETE") != stamp:
+    def build_edges(tmp: str) -> None:
         li = _t(spark, sf_dir, "lineitem").to_df().select("l_orderkey", "l_partkey")
         if even_only:
             li = li.filter(F.col("l_partkey") % 2 == 0)
-        base_e = _copurchase_order_edges(li.filter(F.col("l_orderkey") % 50 != 0))
-        _publish_artifact(
-            ep, "_EDGES_COMPLETE", stamp, lambda t: persist_edges(base_e, t)
+        persist_edges(
+            _copurchase_order_edges(li.filter(F.col("l_orderkey") % 50 != 0)), tmp
         )
-    if current(wp, "_WEDGES_COMPLETE") != stamp:
-        _publish_artifact(
-            wp,
-            "_WEDGES_COMPLETE",
-            stamp,
-            lambda t: persist_wedge_census(
-                load_edges(spark, ep),
-                t,
-                max_center_degree=_GRAPH_WEDGE_CAP,
-                assume_canonical=True,
-            ),
-        )
+
+    ensure_artifact(ep, "_EDGES_COMPLETE", stamp, build_edges)
+    ensure_artifact(
+        wp,
+        "_WEDGES_COMPLETE",
+        stamp,
+        lambda tmp: _persist_capped_census(spark, ep, tmp),
+    )
     return ep, wp
 
 
@@ -12425,77 +12171,45 @@ def _ensure_graph_append_demo(spark: SparkSession, sf_dir: str) -> tuple:
     = exactly the full co-purchase graph, so both appended artifacts
     must equal their one-shot builds value-for-value (that equality
     IS both entries' oracle; also pytest-pinned on constructed
-    graphs).  Staleness chains the standing edge artifact's content
-    stamp (no extra source scan); the sentinel discipline mirrors
-    _ensure_dedup_index_appended: an 'appending' marker during the
-    in-place mutation forces a clean rebuild after a mid-append
-    crash.  If update_wedge_census cannot fold the delta (missing or
-    unreadable census), it degrades to the one-shot census rebuild —
-    correctness is never conditional on the fast path."""
-    import os
+    graphs).  The stamp chains the standing edge artifact's; both
+    artifacts must carry it to be reused.  If update_wedge_census
+    cannot fold the delta (missing or unreadable census), the fallback
+    is the one-shot census rebuild."""
+    from warp_spark.pipeline.graph import append_edges, update_wedge_census
 
-    from warp_spark.pipeline.graph import (
-        append_edges,
-        load_edges,
-        persist_wedge_census,
-        update_wedge_census,
-    )
-
-    # chain the standing edge artifact's content stamp: same source,
-    # same fingerprint, zero additional scans
-    std_edge_path = _ensure_graph_edges(spark, sf_dir)
-    with open(os.path.join(std_edge_path, "_EDGES_COMPLETE")) as f:
-        edge_stamp = f.read().strip()
+    edge_stamp = read_marker(_ensure_graph_edges(spark, sf_dir), "_EDGES_COMPLETE")
     ep, wp = _graph_edgeapp_path(sf_dir), _graph_wedgeapp_path(sf_dir)
-    e_marker = os.path.join(ep, "_EDGES_COMPLETE")
-    w_marker = os.path.join(wp, "_WEDGES_COMPLETE")
     stamp = f"edgeapp base-main+delta2pct cap={_GRAPH_WEDGE_CAP} over [{edge_stamp}]"
-
-    def read_marker(p):
-        if os.path.exists(p):
-            with open(p) as f:
-                return f.read().strip()
-        return None
-
-    if read_marker(e_marker) == stamp and read_marker(w_marker) == stamp:
+    if (
+        read_marker(ep, "_EDGES_COMPLETE") == stamp
+        and read_marker(wp, "_WEDGES_COMPLETE") == stamp
+    ):
         return ep, wp
 
     li = _t(spark, sf_dir, "lineitem").to_df().select("l_orderkey", "l_partkey")
     delta_e = _copurchase_order_edges(li.filter(F.col("l_orderkey") % 50 == 0))
+    delta = None
+
+    def append(path: str) -> bool:
+        nonlocal delta
+        delta = append_edges(spark, path, delta_e)
+        return True
+
     # start from cheap COPIES of the shared stamp-reused base pair —
     # the base build (including its census) is paid once per content
     # change, shared with the streamed twin
-    import shutil
-
     base_ep, base_wp = _ensure_graph_base(spark, sf_dir)
-    for src, dst in ((base_ep, ep), (base_wp, wp)):
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        shutil.copytree(src, dst)
-    for m in (e_marker, w_marker):
-        with open(m, "w") as f:
-            f.write("appending\n")
-    delta = append_edges(spark, ep, delta_e)
-    if not update_wedge_census(
-        spark, wp, ep, delta, max_center_degree=_GRAPH_WEDGE_CAP
-    ):
-        _publish_artifact(
-            wp,
-            "_WEDGES_COMPLETE",
-            stamp,
-            lambda t: persist_wedge_census(
-                load_edges(spark, ep),
-                t,
-                max_center_degree=_GRAPH_WEDGE_CAP,
-                assume_canonical=True,
-            ),
-        )
-        with open(e_marker, "w") as f:
-            f.write(stamp + "\n")
-        return ep, wp
-    for m in (e_marker, w_marker):
-        with open(m, "w") as f:
-            f.write(stamp + "\n")
+    mutate_artifact(ep, "_EDGES_COMPLETE", stamp, append, base=base_ep)
+    mutate_artifact(
+        wp,
+        "_WEDGES_COMPLETE",
+        stamp,
+        lambda p: update_wedge_census(
+            spark, p, ep, delta, max_center_degree=_GRAPH_WEDGE_CAP
+        ),
+        base=base_wp,
+        fallback=lambda tmp: _persist_capped_census(spark, ep, tmp),
+    )
     return ep, wp
 
 
@@ -12719,78 +12433,78 @@ def graph_wedges_append_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import os
     import shutil
     import tempfile
 
     from warp_spark.pipeline.graph import (
         append_edges,
-        load_edges,
         load_wedge_census,
-        persist_wedge_census,
         update_wedge_census,
     )
 
     base_ep, base_wp = _ensure_graph_base(spark, sf_dir, even_only=True)
     ep = _artifact_path("warp_graph_edgestr_v1", sf_dir)
     wp = _artifact_path("warp_graph_wedgestr_v1", sf_dir)
-    for src, dst in ((base_ep, ep), (base_wp, wp)):
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        shutil.copytree(src, dst)
     li = (
         _t(spark, sf_dir, "lineitem")
         .to_df()
         .select("l_orderkey", "l_partkey")
         .filter(F.col("l_partkey") % 2 == 0)
     )
-    # materialize the delta ONCE: the three stage files below must not
-    # each re-pay the lineitem self-join
-    delta_e = _copurchase_order_edges(
-        li.filter(F.col("l_orderkey") % 50 == 0)
-    ).localCheckpoint(eager=True)
-    root = tempfile.mkdtemp(prefix="warp_graph_ingest_stream_")
-    try:
-        # one checkpoint pass stages all three trigger files
-        _stage_split_files(delta_e, root, F.col("src") % 3, ["src", "dst"])
-        stream = (
-            spark.readStream.schema("src bigint, dst bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
+
+    def ingest_stream(path: str) -> bool:
+        # materialize the delta ONCE: the three stage files below must
+        # not each re-pay the lineitem self-join
+        delta_e = _copurchase_order_edges(
+            li.filter(F.col("l_orderkey") % 50 == 0)
+        ).localCheckpoint(eager=True)
+        root = tempfile.mkdtemp(prefix="warp_graph_ingest_stream_")
+        try:
+            # one checkpoint pass stages all three trigger files
+            _stage_split_files(delta_e, root, F.col("src") % 3, ["src", "dst"])
+            stream = (
+                spark.readStream.schema("src bigint, dst bigint")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(root)
+            )
+
+            def ingest(bdf, batch_id):
+                if not bdf.isEmpty():
+                    append_edges(spark, path, bdf)
+
+            q = stream.writeStream.foreachBatch(ingest).start()
+            q.processAllAvailable()
+            q.stop()
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+        return True
+
+    def fold_delta(path: str) -> bool:
+        # cumulative delta = appended minus base: deterministic, no
+        # state carried across triggers
+        delta_all = (
+            spark.read.parquet(ep)
+            .select("u", "v")
+            .join(spark.read.parquet(base_ep).select("u", "v"), ["u", "v"], "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        return update_wedge_census(
+            spark, path, ep, delta_all, max_center_degree=_GRAPH_WEDGE_CAP
         )
 
-        def ingest(bdf, batch_id):
-            if not bdf.isEmpty():
-                append_edges(spark, ep, bdf)
-
-        q = stream.writeStream.foreachBatch(ingest).start()
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    # cumulative delta = appended minus base: deterministic, no state
-    # carried across triggers
-    delta_all = (
-        spark.read.parquet(ep)
-        .select("u", "v")
-        .join(spark.read.parquet(base_ep).select("u", "v"), ["u", "v"], "left_anti")
-        .localCheckpoint(eager=True)
+    mutate_artifact(
+        ep, "_EDGES_COMPLETE", "graphstr base + streamed delta", ingest_stream,
+        base=base_ep,
     )
-    if not update_wedge_census(
-        spark, wp, ep, delta_all, max_center_degree=_GRAPH_WEDGE_CAP
-    ):
-        _publish_artifact(
-            wp,
-            "_WEDGES_COMPLETE",
-            "graphstr rebuilt (delta fold refused)",
-            lambda t: persist_wedge_census(
-                load_edges(spark, ep),
-                t,
-                max_center_degree=_GRAPH_WEDGE_CAP,
-                assume_canonical=True,
-            ),
-        )
+    mutate_artifact(
+        wp,
+        "_WEDGES_COMPLETE",
+        "graphstr base + streamed delta, folded",
+        fold_delta,
+        base=base_wp,
+        fallback=lambda tmp: _persist_capped_census(spark, ep, tmp),
+        fallback_stamp="graphstr rebuilt (delta fold refused)",
+    )
     census = load_wedge_census(spark, wp)
     return census.agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
@@ -15965,20 +15679,17 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — the lexical sibling of the persisted IVF-PQ pair: postings
 # (term, doc_id, tf, dl) written PARTITIONED BY a term-hash bucket (an
 # inverted file as a physical layout — probing is partition pruning),
-# plus the 1-row exact corpus stats.  Build-once discipline via a
-# marker stamp, mirroring _ensure_ann_index.
+# plus the 1-row exact corpus stats, kept by artifacts.ensure_artifact
+# like _ensure_ann_index.
 # ---------------------------------------------------------------------------
 def _bm25_index_path(sf_dir: str) -> str:
     return _artifact_path("warp_bm25_idx_v1", sf_dir)
 
 
 def _ensure_bm25_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
-    import os
-
     from warp_spark.pipeline.text import build_bm25_index
 
     path = _bm25_index_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     docs = _t(spark, sf_dir, "documents").to_df()
     # content fingerprint, not just cardinality (r10 ADVICE): a corpus
     # content change at unchanged row count must rebuild.  One cheap
@@ -15999,20 +15710,14 @@ def _ensure_bm25_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) 
             f"n_docs={fp['n']} idsum={fp['ids']} crcsum={fp['crc']}"
         )
 
-    stamp = _memo_stamp(
-        f"bm25_idx:{sf_dir}", f"{sf_dir}/documents.parquet", _fp
+    stamp = memo_stamp(f"bm25_idx:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    ensure_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        stamp,
+        lambda tmp: build_bm25_index(docs, tmp, n_buckets=n_buckets),
+        rebuild,
     )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if rebuild or current != stamp:
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            stamp,
-            lambda tmp: build_bm25_index(docs, tmp, n_buckets=n_buckets),
-        )
     return path
 
 
@@ -16102,15 +15807,12 @@ def _ensure_bm25_index_appended(spark: SparkSession, sf_dir: str) -> str:
     text.py::append_bm25_index — base + slice = the FULL corpus the
     standing index covers, so probing the appended index must
     reproduce bm25_index_probe bit-for-bit (that equality IS the
-    entry's oracle).  Same stamp/sentinel discipline as the dedup
-    twin: content-fingerprinted final stamp, 'appending' sentinel
-    during the in-place mutation."""
-    import os
-
+    entry's oracle).  The stamp fingerprints base and slice; a
+    refused append (the slice re-delivers indexed ids) falls back to
+    the one-shot build over the full corpus."""
     from warp_spark.pipeline.text import append_bm25_index, build_bm25_index
 
     path = _bm25_append_path(sf_dir)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
     docs = _t(spark, sf_dir, "documents").to_df()
     is_base = F.col("doc_id") % 20 < 16
 
@@ -16130,37 +15832,22 @@ def _ensure_bm25_index_appended(spark: SparkSession, sf_dir: str) -> str:
             f"+ appended n={fp['ns']} crc={fp['crcs']}"
         )
 
-    stamp = _memo_stamp(
-        f"bm25_app:{sf_dir}", f"{sf_dir}/documents.parquet", _fp
-    )
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if current == stamp:
+    stamp = memo_stamp(f"bm25_app:{sf_dir}", f"{sf_dir}/documents.parquet", _fp)
+    if read_marker(path, "_INDEX_COMPLETE") == stamp:
         return path
-    base = docs.filter(is_base)
-    _publish_artifact(
+    publish_artifact(
         path,
         "_INDEX_COMPLETE",
         "bm25app base only",
-        lambda tmp: build_bm25_index(base, tmp),
+        lambda tmp: build_bm25_index(docs.filter(is_base), tmp),
     )
-    with open(marker, "w") as f:
-        f.write("appending\n")
-    if not append_bm25_index(spark, path, docs.filter(~is_base)):
-        # precondition refused (slice re-delivers indexed ids): the
-        # safe path is the one-shot rebuild over the full corpus —
-        # correctness is never conditional on the fast path
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            stamp,
-            lambda tmp: build_bm25_index(docs, tmp),
-        )
-        return path
-    with open(marker, "w") as f:
-        f.write(stamp + "\n")
+    mutate_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        stamp,
+        lambda p: append_bm25_index(spark, p, docs.filter(~is_base)),
+        fallback=lambda tmp: build_bm25_index(docs, tmp),
+    )
     return path
 
 
@@ -16284,9 +15971,6 @@ ORACLES["bm25_index_append"] = ORACLES["bm25_topk"]
     """,
 )
 def bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from warp_spark.pipeline.text import (
         bm25_index_probe,
         build_bm25_index,
@@ -16295,26 +15979,18 @@ def bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").to_df()
     del_docs = docs.filter(F.col("doc_id") % 20 >= 16)
-    std_path = _ensure_bm25_index(spark, sf_dir)
     path = _artifact_path("warp_bm25_idxdel_v1", sf_dir)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    shutil.copytree(std_path, path)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
-    with open(marker, "w") as f:
-        f.write("deleting\n")
-    if not delete_from_bm25_index(spark, path, del_docs):
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "bm25 delete rebuilt (refused)",
-            lambda tmp: build_bm25_index(
-                docs.filter(F.col("doc_id") % 20 < 16), tmp
-            ),
-        )
-    else:
-        with open(marker, "w") as f:
-            f.write("full minus 16..19 (deleted)\n")
+    mutate_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        "full minus 16..19 (deleted)",
+        lambda p: delete_from_bm25_index(spark, p, del_docs),
+        base=_ensure_bm25_index(spark, sf_dir),
+        fallback=lambda tmp: build_bm25_index(
+            docs.filter(F.col("doc_id") % 20 < 16), tmp
+        ),
+        fallback_stamp="bm25 delete rebuilt (refused)",
+    )
     return bm25_index_probe(
         spark,
         path,
@@ -16345,9 +16021,6 @@ def bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from warp_spark.pipeline.similarity import (
         brute_force_topk,
         delete_from_ivfpq_index,
@@ -16358,26 +16031,18 @@ def ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings").to_df()
     is_base = F.col("vec_id") % 5 != 4
-    std_path = _ensure_ann_index_appended(spark, sf_dir)
     path = _artifact_path("warp_ann_idxdel_v1", sf_dir)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    shutil.copytree(std_path, path)
-    marker = os.path.join(path, "_INDEX_COMPLETE")
-    with open(marker, "w") as f:
-        f.write("deleting\n")
-    if not delete_from_ivfpq_index(spark, path, emb.filter(~is_base)):
-        _publish_artifact(
-            path,
-            "_INDEX_COMPLETE",
-            "ann delete rebuilt (refused)",
-            lambda tmp: persist_ivfpq_index(
-                emb.filter(is_base), tmp, n_centroids=16, m=16, n_codes=32
-            ),
-        )
-    else:
-        with open(marker, "w") as f:
-            f.write("appended minus held-out fifth (deleted)\n")
+    mutate_artifact(
+        path,
+        "_INDEX_COMPLETE",
+        "appended minus held-out fifth (deleted)",
+        lambda p: delete_from_ivfpq_index(spark, p, emb.filter(~is_base)),
+        base=_ensure_ann_index_appended(spark, sf_dir),
+        fallback=lambda tmp: persist_ivfpq_index(
+            emb.filter(is_base), tmp, n_centroids=16, m=16, n_codes=32
+        ),
+        fallback_stamp="ann delete rebuilt (refused)",
+    )
     centroids, codebooks, codes, storage = load_ivfpq_index(spark, path)
     q = emb.filter(F.col("vec_id") < 10)
     return _ann_recall_check(

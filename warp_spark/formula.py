@@ -510,7 +510,7 @@ class _Parser:
         return Literal(sign * base)
 
     def string_literal(self) -> Node:
-        assert self.eat('"')
+        self.eat('"')  # the caller peeked this opening token
         out = []
         while self.pos < len(self.text):
             if self.eat('""'):
@@ -524,7 +524,7 @@ class _Parser:
         self.error("unterminated string literal")
 
     def blob_literal(self) -> Node:
-        assert self.eat("`")
+        self.eat("`")  # the caller peeked this opening token
         end = self.text.find("`", self.pos)
         if end < 0:
             self.error("unterminated blob literal")
@@ -536,7 +536,7 @@ class _Parser:
             self.error("invalid base64 in blob literal")
 
     def list_literal(self) -> Node:
-        assert self.eat("{")
+        self.eat("{")  # the caller peeked this opening token
         self.ws()
         if self.eat("}"):
             return ListLiteral(())

@@ -504,7 +504,13 @@ def jaccard_links(
     the same ``max_center_degree``; when given, the quadratic
     expansion is skipped entirely and this is scan + anti-join +
     degree join + top-k.  ``assume_canonical``: see
-    :func:`_canonical_undirected`."""
+    :func:`_canonical_undirected`.
+
+    EAGER: the top-k runs Spark jobs and collects at call time
+    (:func:`_topk_nonadjacent`), so errors surface here and the
+    returned frame holds the collected rows — a later action does
+    not re-read ``edges`` or ``census`` (except past the escalation
+    cap, where the exact anti-join fallback is returned lazily)."""
     und, sym, deg = _canonical_undirected(edges, assume_canonical)
     if census is None:
         census = _census_from(und, sym, deg, max_center_degree)
@@ -559,7 +565,10 @@ def resource_allocation_links(
     LITERALLY shared with jaccard_links (:func:`wedge_census` emits cn
     and ra_ppm from one groupBy), and a persisted census can be passed
     via ``census=`` to skip the expansion entirely.
-    ``assume_canonical``: see :func:`_canonical_undirected`."""
+    ``assume_canonical``: see :func:`_canonical_undirected`.
+
+    EAGER, like :func:`jaccard_links`: it collects at call time and
+    the returned frame holds the collected rows."""
     und, sym, deg = _canonical_undirected(edges, assume_canonical)
     scored_pairs = (
         census

@@ -1258,12 +1258,12 @@ def delete_from_ivfpq_index(
     the remaining corpus).  On ``True``,
     delete(append(build(B), S), S) is BYTE-EQUAL to build(B)
     (pytest-pinned) — append and delete are exact inverses under a
-    frozen model.  A slice that repeats an id REFUSES too (the fused
-    verification counts each recomputed row once per occurrence, so
-    duplicates inflate ``matched`` past ``n_del``) — stricter than the
-    pre-r14 leftsemi form, which tolerated duplicate rows silently;
-    refusing hands the ambiguity to the caller's rebuild instead of
-    guessing.  The ENTIRE verb — verification, inverted-list
+    frozen model.  Exact duplicate rows in the slice REFUSE too (the
+    fused verification counts each recomputed row once per occurrence,
+    so duplicates inflate ``matched`` past ``n_del``), but a repeated
+    id whose other occurrence carries a conflicting vector is ignored
+    if one occurrence matches: ``n_del`` counts distinct ids and only
+    the matching occurrence joins.  The ENTIRE verb — verification, inverted-list
     rewrite, storage swap — holds the canonical ``<path>.lock``
     (artifacts.locked_mutation, r13 verdict item 3)."""
     import os
