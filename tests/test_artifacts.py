@@ -500,6 +500,75 @@ def test_delete_from_ivfpq_index_inverts_append(spark, tmp_path):
     assert delete_from_ivfpq_index(spark, p_del, drift) is False
 
 
+def _bytes_tree(path):
+    out = {}
+    for d, _, files in os.walk(path):
+        for n in files:
+            with open(os.path.join(d, n), "rb") as f:
+                out[os.path.relpath(os.path.join(d, n), path)] = f.read()
+    return out
+
+
+def test_delete_from_ivfpq_index_refuses_a_conflicting_repeat(spark, tmp_path):
+    """A slice naming one id twice — once with its indexed vector, once
+    with a conflicting one — refuses, and the index is byte-unchanged."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from warp_spark.pipeline.similarity import (
+        delete_from_ivfpq_index,
+        persist_ivfpq_index,
+    )
+
+    rng = random.Random(11)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(30)],
+        "vec_id long, embedding array<float>",
+    )
+    path = str(tmp_path / "idx")
+    persist_ivfpq_index(emb, path, n_centroids=4, m=4, n_codes=8)
+    before = _bytes_tree(path)
+    exact = emb.filter("vec_id = 3")
+    conflicting = exact.select(
+        "vec_id", F.transform("embedding", lambda x: x + F.lit(2.0)).alias("embedding")
+    )
+    assert delete_from_ivfpq_index(spark, path, exact.union(conflicting)) is False
+    assert delete_from_ivfpq_index(spark, path, exact.union(exact)) is False
+    assert _bytes_tree(path) == before
+
+
+def test_crash_between_swap_renames_self_heals(tmp_path, monkeypatch):
+    """A publish that dies between the two swap renames (old tree moved
+    aside, new tree not yet in place) leaves no marker at ``path``, so
+    the next ensure rebuilds a tree equal to a fresh build, and no
+    ``.build.`` scratch tree survives."""
+    from warp_spark import artifacts
+    from warp_spark.artifacts import ensure_artifact
+
+    path = str(tmp_path / "art")
+    ensure_artifact(path, "_DONE", "s1", _writer("v1"))
+    real_rename, renames = os.rename, []
+
+    def rename(src, dst):
+        renames.append((src, dst))
+        if len(renames) == 2:
+            raise OSError("crash between the swap renames")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(artifacts.os, "rename", rename)
+        with pytest.raises(OSError, match="between the swap renames"):
+            ensure_artifact(path, "_DONE", "s2", _writer("v2"))
+    assert len(renames) == 2 and renames[0][0] == path
+    assert not os.path.exists(path)
+    assert ensure_artifact(path, "_DONE", "s2", _writer("v2")) is True
+    ref = str(tmp_path / "ref")
+    ensure_artifact(ref, "_DONE", "s2", _writer("v2"))
+    assert _tree(path) == _tree(ref)
+    assert not [n for n in os.listdir(tmp_path) if ".build." in n]
+
+
 def test_mutation_verbs_serialize_on_the_index_root_lock(spark, tmp_path):
     """r13 verdict item 3: EVERY mutation verb (append / delete /
     compact) must hold the canonical <index>.lock for its whole

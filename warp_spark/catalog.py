@@ -51,6 +51,7 @@ from warp_spark.artifacts import (
 from warp_spark.dataset import Dataset, Order
 from warp_spark.functions import call
 from warp_spark.localdf import small_rows_df
+from warp_spark.session import read_parquet
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> Dataset:
@@ -63,7 +64,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     native timestamp by integer-dividing to microseconds — same
     truncation DuckDB applies, so the oracle agrees bit-for-bit."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
     if dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     return df
@@ -6877,9 +6878,9 @@ def _ensure_dedup_index(spark: SparkSession, sf_dir: str, rebuild: bool = False)
 )
 def dedup_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_dedup_index(spark, sf_dir, rebuild=True)
-    bands = spark.read.parquet(f"{path}/bands")
-    sh = spark.read.parquet(f"{path}/shingles")
-    st = spark.read.parquet(f"{path}/stats")
+    bands = read_parquet(spark, f"{path}/bands")
+    sh = read_parquet(spark, f"{path}/shingles")
+    st = read_parquet(spark, f"{path}/stats")
     bs = bands.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("corpus_id").alias("n_ids"),
@@ -7229,7 +7230,7 @@ def dedup_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # standing corpus — its doc count is the cheap invariant a nightly
         # job asserts before serving (a full content re-stamp would re-pay
         # the corpus scan the append path exists to avoid)
-        n_index = int(spark.read.parquet(f"{path}/stats").first()["n_docs"])
+        n_index = int(read_parquet(spark, f"{path}/stats").first()["n_docs"])
         if n_index != docs.filter(F.col("doc_id") % 20 < 16).count():
             return False
         # 3) COMPACT the append-grown layout back to one file per bucket
@@ -7837,7 +7838,7 @@ def events_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFram
     d = tempfile.mkdtemp(prefix="warp_stream_entry_")
     name = f"ss_left_join_{uuid.uuid4().hex[:8]}"
     try:
-        batch_ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        batch_ev = read_parquet(spark, f"{sf_dir}/events.parquet")
         max_ts = batch_ev.agg(F.max("ts")).first()[0]  # 1-scalar artifact
         flush_ts = max_ts + _dt.timedelta(days=30)
         n_staged = _stage_parquet_files(f"{sf_dir}/events.parquet", d, "file")
@@ -9238,7 +9239,7 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tempfile.mkdtemp(prefix="warp_part_entry_")
     try:
         write_hive_partitioned(_events(spark, sf_dir), d, ["event_type"])
-        back = spark.read.parquet(d).filter(
+        back = read_parquet(spark, d).filter(
             F.col("event_type").isin("click", "purchase")
         )
         out = (
@@ -11443,7 +11444,7 @@ def _ensure_tdigest(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> 
 )
 def tdigest_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_tdigest(spark, sf_dir, rebuild=True)
-    hist = spark.read.parquet(path)
+    hist = read_parquet(spark, path)
     return (
         hist.groupBy("l_returnflag")
         .agg(
@@ -11468,7 +11469,7 @@ def tdigest_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from warp_spark.sketches import tdigest_quantiles_from_hist
 
     path = _ensure_tdigest(spark, sf_dir)
-    hist = spark.read.parquet(path)
+    hist = read_parquet(spark, path)
     return tdigest_quantiles_from_hist(
         hist, "l_returnflag", qs=(0.01, 0.5, 0.99)
     ).orderBy("l_returnflag")
@@ -12483,9 +12484,9 @@ def graph_ingest_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cumulative delta = appended minus base: deterministic, no
         # state carried across triggers
         delta_all = (
-            spark.read.parquet(ep)
+            read_parquet(spark, ep)
             .select("u", "v")
-            .join(spark.read.parquet(base_ep).select("u", "v"), ["u", "v"], "left_anti")
+            .join(read_parquet(spark, base_ep).select("u", "v"), ["u", "v"], "left_anti")
             .localCheckpoint(eager=True)
         )
         return update_wedge_census(
@@ -15745,8 +15746,8 @@ def _ensure_bm25_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) 
 )
 def bm25_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_bm25_index(spark, sf_dir, rebuild=True)
-    postings = spark.read.parquet(f"{path}/postings")
-    st = spark.read.parquet(f"{path}/stats")
+    postings = read_parquet(spark, f"{path}/postings")
+    st = read_parquet(spark, f"{path}/stats")
     per_doc = postings.select("doc_id", "dl").distinct()
     ps = postings.agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from warp_spark.aggregators import Aggregator
 from warp_spark.localdf import small_rows_df
+from warp_spark.session import read_parquet
 from warp_spark.values import to_number  # noqa: F401  (used by rank windows)
 
 ROW_ID = "__row_id"
@@ -87,7 +88,7 @@ class Dataset:
     # -- sources -----------------------------------------------------------
     @staticmethod
     def from_parquet(spark: SparkSession, path: str) -> "Dataset":
-        return Dataset(spark.read.parquet(path))
+        return Dataset(read_parquet(spark, path))
 
     @staticmethod
     def from_df(df: DataFrame) -> "Dataset":

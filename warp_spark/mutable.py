@@ -26,6 +26,8 @@ from typing import Mapping, Optional, Union
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from warp_spark.session import read_parquet
+
 ExprLike = Union[Column, str]
 
 
@@ -142,7 +144,7 @@ class MutableTable:
                 f"version {version} ({name}) was pruned — construct the "
                 f"table with keep_versions > {self.keep_versions} to retain it"
             )
-        return self.spark.read.parquet(d)
+        return read_parquet(self.spark, d)
 
     # -- DML (MutableData.swift:125-196) -----------------------------------
     def overwrite(self, df: DataFrame) -> None:

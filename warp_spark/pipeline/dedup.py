@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from warp_spark.artifacts import locked_mutation
 from warp_spark.localdf import small_rows_df
+from warp_spark.session import read_parquet
 from warp_spark.pipeline.text import fingerprint, tokens
 
 DEFAULT_NUM_HASHES = 12
@@ -969,7 +970,7 @@ def dedup_index_probe(
     min-corpus-id winner, exactly incremental_dedup_stream's
     static-side semantics, so probed results equal the in-query
     incremental path (pytest-pinned)."""
-    st = spark.read.parquet(f"{path}/stats").first()
+    st = read_parquet(spark, f"{path}/stats").first()
     n_buckets = st["n_buckets"]
     s = (
         batch.select(
@@ -1003,11 +1004,11 @@ def dedup_index_probe(
         .collect()
     )
     bands = (
-        spark.read.parquet(f"{path}/bands")
+        read_parquet(spark, f"{path}/bands")
         .filter(F.col("bucket").isin(bks))
         .select("corpus_id", "band_idx", "band_val")
     )
-    sh_old = spark.read.parquet(f"{path}/shingles")
+    sh_old = read_parquet(spark, f"{path}/shingles")
     cand = s.join(bands, ["band_idx", "band_val"]).join(sh_old, "corpus_id")
     verified = cand.withColumn(
         "jaccard",
@@ -1063,7 +1064,7 @@ def append_dedup_index(
     ``<path>.lock`` (artifacts.locked_mutation, r13 verdict item 3),
     so two appends, or an append racing a delete/compact, serialize
     instead of both passing the precondition and double-inserting."""
-    st = spark.read.parquet(f"{path}/stats").first()
+    st = read_parquet(spark, f"{path}/stats").first()
     n_buckets = int(st["n_buckets"])
     cap = int(st["max_corpus_bucket"])
     bands_per_doc = int(st["num_hashes"]) // int(st["band_size"])
@@ -1073,7 +1074,7 @@ def append_dedup_index(
     ):
         return False  # signature shape drifted from this module's path
     try:
-        old_bands = spark.read.parquet(f"{path}/bands")
+        old_bands = read_parquet(spark, f"{path}/bands")
         n_band_rows = old_bands.count()
     except Exception:
         return False  # unreadable/empty postings (e.g. cap dropped all)
@@ -1230,7 +1231,7 @@ def delete_from_dedup_index(
 
     from warp_spark.artifacts import unique_sibling_tmp
 
-    st = spark.read.parquet(f"{path}/stats").first()
+    st = read_parquet(spark, f"{path}/stats").first()
     n_buckets = int(st["n_buckets"])
     bands_per_doc = int(st["num_hashes"]) // int(st["band_size"])
     if (
@@ -1239,7 +1240,7 @@ def delete_from_dedup_index(
     ):
         return False  # signature shape drifted from this module's path
     try:
-        old_bands = spark.read.parquet(f"{path}/bands")
+        old_bands = read_parquet(spark, f"{path}/bands")
         n_band_rows = old_bands.count()
     except Exception:
         return False
@@ -1303,7 +1304,7 @@ def delete_from_dedup_index(
 
     sh_tmp = unique_sibling_tmp(os.path.join(path, "shingles"), tag="delete")
     (
-        spark.read.parquet(f"{path}/shingles")
+        read_parquet(spark, f"{path}/shingles")
         .join(del_ids, "corpus_id", "left_anti")
         .coalesce(8)
         .write.mode("overwrite")
@@ -1356,15 +1357,15 @@ def compact_dedup_index(spark, path: str) -> None:
 
     from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
 
-    st = spark.read.parquet(f"{path}/stats")
+    st = read_parquet(spark, f"{path}/stats")
     n_buckets = int(st.first()["n_buckets"])
     tmp = unique_sibling_tmp(path, tag="compact")
     # one task per bucket (deterministic hash routing) → one file per
     # bucket partition, the build-time layout
-    spark.read.parquet(f"{path}/bands").repartition(
+    read_parquet(spark, f"{path}/bands").repartition(
         n_buckets, "bucket"
     ).write.partitionBy("bucket").parquet(f"{tmp}/bands")
-    spark.read.parquet(f"{path}/shingles").coalesce(8).write.parquet(
+    read_parquet(spark, f"{path}/shingles").coalesce(8).write.parquet(
         f"{tmp}/shingles"
     )
     st.coalesce(1).write.parquet(f"{tmp}/stats")

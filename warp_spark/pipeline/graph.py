@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from warp_spark.artifacts import locked_mutation
+from warp_spark.session import read_parquet
 
 
 def pagerank_int(
@@ -387,7 +388,7 @@ def load_wedge_census(spark, path: str) -> DataFrame:
     """Read back a persist_wedge_census artifact: (x, y, cn, ra_ppm)
     rows with x < y — feed to jaccard_links / resource_allocation_links
     via their ``census=`` parameter to skip the quadratic expansion."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def _topk_nonadjacent(
@@ -622,7 +623,7 @@ def load_edges(spark, path: str) -> DataFrame:
     ``src``/``dst`` (their internal canonicalization is then a no-op
     distinct over an already-canonical set, never a fact-table
     self-join)."""
-    return spark.read.parquet(path).select(
+    return read_parquet(spark, path).select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     )
 
@@ -658,7 +659,7 @@ def append_edges(spark, path: str, new_edges: DataFrame) -> DataFrame:
     so two appends, or an append racing a delete/compact, serialize
     on one lock."""
     su, sv = F.col("src"), F.col("dst")
-    standing = spark.read.parquet(path)
+    standing = read_parquet(spark, path)
     delta = (
         new_edges.select(F.least(su, sv).alias("u"), F.greatest(su, sv).alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -695,7 +696,7 @@ def compact_edges(spark, path: str) -> None:
     from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
 
     tmp = unique_sibling_tmp(path, tag="compact")
-    spark.read.parquet(path).repartition(8, "u").write.mode("overwrite").parquet(tmp)
+    read_parquet(spark, path).repartition(8, "u").write.mode("overwrite").parquet(tmp)
     for name in os.listdir(path):
         full = os.path.join(path, name)
         if (
@@ -751,7 +752,7 @@ def delete_edges(spark, path: str, removed_edges: DataFrame) -> DataFrame:
     from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
 
     su, sv = F.col("src"), F.col("dst")
-    standing = spark.read.parquet(path)
+    standing = read_parquet(spark, path)
     slice_ = (
         removed_edges.select(
             F.least(su, sv).alias("u"), F.greatest(su, sv).alias("v")
@@ -833,12 +834,12 @@ def update_wedge_census(
     if not os.path.isdir(census_path):
         return False
     try:
-        standing = spark.read.parquet(census_path)
+        standing = read_parquet(spark, census_path)
     except Exception:
         return False
     if delta.isEmpty():
         return True  # nothing changed: the census is already current
-    new_und = spark.read.parquet(edges_path).select("u", "v")
+    new_und = read_parquet(spark, edges_path).select("u", "v")
     old_und = (
         new_und.union(delta.select("u", "v"))
         if removed

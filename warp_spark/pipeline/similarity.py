@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from warp_spark.artifacts import locked_mutation
 from warp_spark.localdf import small_rows_df
+from warp_spark.session import read_parquet
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -1182,7 +1183,7 @@ def append_ivfpq_index(
     or an append racing a delete/compact, serialize instead of both
     passing the precondition."""
     overlap = (
-        spark.read.parquet(f"{path}/codes")
+        read_parquet(spark, f"{path}/codes")
         .select("vec_id")
         .join(
             new_vecs.select(F.col(id_col).alias("vec_id")).distinct(),
@@ -1196,12 +1197,12 @@ def append_ivfpq_index(
         return False  # slice re-delivers indexed ids: rebuild honestly
     centroids = [
         (int(r["centroid_id"]), [float(x) for x in r["vector"]])
-        for r in spark.read.parquet(f"{path}/centroids")
+        for r in read_parquet(spark, f"{path}/centroids")
         .orderBy("centroid_id")
         .collect()
     ]
     book_rows = (
-        spark.read.parquet(f"{path}/codebooks").orderBy("subspace", "code").collect()
+        read_parquet(spark, f"{path}/codebooks").orderBy("subspace", "code").collect()
     )
     n_sub = int(book_rows[-1]["subspace"]) + 1
     codebooks = [
@@ -1258,12 +1259,11 @@ def delete_from_ivfpq_index(
     the remaining corpus).  On ``True``,
     delete(append(build(B), S), S) is BYTE-EQUAL to build(B)
     (pytest-pinned) — append and delete are exact inverses under a
-    frozen model.  Exact duplicate rows in the slice REFUSE too (the
-    fused verification counts each recomputed row once per occurrence,
-    so duplicates inflate ``matched`` past ``n_del``), but a repeated
-    id whose other occurrence carries a conflicting vector is ignored
-    if one occurrence matches: ``n_del`` counts distinct ids and only
-    the matching occurrence joins.  The ENTIRE verb — verification, inverted-list
+    frozen model.  The slice must name each id once: its row count
+    must equal its distinct non-null id count, so a repeated id
+    (an exact duplicate row, or a second occurrence carrying a
+    conflicting vector) and a null id REFUSE before anything is
+    touched.  The ENTIRE verb — verification, inverted-list
     rewrite, storage swap — holds the canonical ``<path>.lock``
     (artifacts.locked_mutation, r13 verdict item 3)."""
     import os
@@ -1273,12 +1273,12 @@ def delete_from_ivfpq_index(
 
     centroids = [
         (int(r["centroid_id"]), [float(x) for x in r["vector"]])
-        for r in spark.read.parquet(f"{path}/centroids")
+        for r in read_parquet(spark, f"{path}/centroids")
         .orderBy("centroid_id")
         .collect()
     ]
     book_rows = (
-        spark.read.parquet(f"{path}/codebooks").orderBy("subspace", "code").collect()
+        read_parquet(spark, f"{path}/codebooks").orderBy("subspace", "code").collect()
     )
     n_sub = int(book_rows[-1]["subspace"]) + 1
     codebooks = [
@@ -1295,18 +1295,21 @@ def delete_from_ivfpq_index(
         F.coalesce(enc["centroid_id"], F.lit(-1)).alias("centroid_id"),
         enc["codes"].alias("codes"),
     ).localCheckpoint(eager=True)
-    # ONE job answers both "how many distinct ids" and "which lists
-    # are touched" (previously a count + a collect over the same tiny
-    # checkpointed frame — two scheduler round-trips for one answer)
+    # ONE job answers "how many rows", "how many distinct ids" and
+    # "which lists are touched" (previously a count + a collect over
+    # the same tiny checkpointed frame — two scheduler round-trips)
     pre = del_enc.agg(
+        F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("vec_id").alias("n_del"),
         F.collect_set("centroid_id").alias("touched"),
     ).first()
     n_del = int(pre["n_del"])
+    if int(pre["n_rows"]) != n_del:
+        return False  # a repeated or null id
     if n_del == 0:
         return True
     touched = sorted(pre["touched"])
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = read_parquet(spark, f"{path}/codes")
     pruned = codes.filter(F.col("centroid_id").isin(touched))
     # ONE full codes pass answers both verification counts (previously
     # two scans): rows of the requested ids anywhere in the index
@@ -1354,7 +1357,7 @@ def delete_from_ivfpq_index(
 
     st_tmp = unique_sibling_tmp(os.path.join(path, "storage"), tag="delete")
     (
-        spark.read.parquet(f"{path}/storage")
+        read_parquet(spark, f"{path}/storage")
         .join(del_ids, "vec_id", "left_anti")
         .coalesce(8)
         .write.mode("overwrite")
@@ -1385,17 +1388,17 @@ def compact_ivfpq_index(spark, path: str) -> None:
 
     from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
 
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = read_parquet(spark, f"{path}/codes")
     n_lists = codes.select("centroid_id").distinct().count()
     tmp = unique_sibling_tmp(path, tag="compact")
     codes.repartition(max(int(n_lists), 1), "centroid_id").write.partitionBy(
         "centroid_id"
     ).parquet(f"{tmp}/codes")
-    spark.read.parquet(f"{path}/storage").coalesce(8).write.parquet(
+    read_parquet(spark, f"{path}/storage").coalesce(8).write.parquet(
         f"{tmp}/storage"
     )
     for sub in ("centroids", "codebooks"):
-        spark.read.parquet(f"{path}/{sub}").coalesce(1).write.parquet(
+        read_parquet(spark, f"{path}/{sub}").coalesce(1).write.parquet(
             f"{tmp}/{sub}"
         )
     for name in os.listdir(path):
@@ -1470,12 +1473,12 @@ def load_ivfpq_index(spark: SparkSession, path: str):
     is touched for |shortlist|·|queries| rows only."""
     centroids = [
         (int(r["centroid_id"]), [float(x) for x in r["vector"]])
-        for r in spark.read.parquet(f"{path}/centroids")
+        for r in read_parquet(spark, f"{path}/centroids")
         .orderBy("centroid_id")
         .collect()
     ]
     book_rows = (
-        spark.read.parquet(f"{path}/codebooks").orderBy("subspace", "code").collect()
+        read_parquet(spark, f"{path}/codebooks").orderBy("subspace", "code").collect()
     )
     n_sub = int(book_rows[-1]["subspace"]) + 1
     codebooks = [
@@ -1486,12 +1489,12 @@ def load_ivfpq_index(spark: SparkSession, path: str):
         ]
         for j in range(n_sub)
     ]
-    codes = spark.read.parquet(f"{path}/codes").select(
+    codes = read_parquet(spark, f"{path}/codes").select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("centroid_id").cast("int").alias("centroid_id"),
         "codes",
     )
-    storage = spark.read.parquet(f"{path}/storage").select(
+    storage = read_parquet(spark, f"{path}/storage").select(
         "vec_id", F.col("vector").alias("embedding")
     )
     return centroids, codebooks, codes, storage

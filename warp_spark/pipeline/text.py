@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from warp_spark.artifacts import locked_mutation
 from warp_spark.localdf import small_rows_df
+from warp_spark.session import read_parquet
 
 # Small function-word lists per language for the n-gram/stopword-hit
 # language heuristic. Deliberately tiny: the heuristic is argmax of hit
@@ -1738,7 +1739,7 @@ def build_bm25_index(
     # n_docs counts ALL docs incl. zero-token ones, so it comes from
     # the docs frame directly — a count(1) that reads no text.
     n_docs = docs.count()
-    stats = docs.sparkSession.read.parquet(f"{path}/postings").agg(
+    stats = read_parquet(docs.sparkSession, f"{path}/postings").agg(
         F.lit(int(n_docs)).cast("long").alias("n_docs"),
         F.coalesce(F.sum("tf"), F.lit(0)).cast("long").alias("total_dl"),
         # persisted so the probe derives its bucket modulus from the
@@ -1791,7 +1792,7 @@ def append_bm25_index(
     or an append racing a delete/compact, serialize instead of both
     passing the precondition."""
     tk = "_bm25_tk"
-    st = spark.read.parquet(f"{path}/stats").first()
+    st = read_parquet(spark, f"{path}/stats").first()
     n_buckets = int(st["n_buckets"]) if "n_buckets" in st.asDict() else 16
     # ONE tokenize pass over the slice (guide §1.2: the old form read
     # and tokenized new_docs twice — once for the postings, once for
@@ -1803,7 +1804,7 @@ def append_bm25_index(
         .localCheckpoint(eager=True)
     )
     overlap = (
-        spark.read.parquet(f"{path}/postings")
+        read_parquet(spark, f"{path}/postings")
         .select(id_col)
         .join(doc_tk.select(id_col).distinct(), id_col, "leftsemi")
         .limit(1)
@@ -1881,7 +1882,7 @@ def delete_from_bm25_index(
     from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
 
     tk = "_bm25_tk"
-    st = spark.read.parquet(f"{path}/stats").first()
+    st = read_parquet(spark, f"{path}/stats").first()
     n_buckets = int(st["n_buckets"]) if "n_buckets" in st.asDict() else 16
     # ONE tokenize pass over the slice (guide §1.2: the old form
     # re-tokenized del_docs a second time just to derive the stats
@@ -1919,7 +1920,7 @@ def delete_from_bm25_index(
         return False  # zero-token rows: indexed-ness unverifiable
     n_del_rows = del_post.count()
     del_ids = doc_tk.select(id_col).distinct()
-    postings = spark.read.parquet(f"{path}/postings")
+    postings = read_parquet(spark, f"{path}/postings")
     # ONE postings pass answers both verification counts (previously
     # two scans): rows of the requested ids anywhere in the index
     # (indexed_for_ids), flagged by whether they match a recomputed
@@ -1987,11 +1988,11 @@ def compact_bm25_index(spark, path: str) -> None:
 
     from warp_spark.artifacts import swap_artifact_dir, unique_sibling_tmp
 
-    st = spark.read.parquet(f"{path}/stats")
+    st = read_parquet(spark, f"{path}/stats")
     strow = st.first()
     n_buckets = int(strow["n_buckets"]) if "n_buckets" in strow.asDict() else 16
     tmp = unique_sibling_tmp(path, tag="compact")
-    spark.read.parquet(f"{path}/postings").repartition(
+    read_parquet(spark, f"{path}/postings").repartition(
         n_buckets, "bucket"
     ).write.partitionBy("bucket").parquet(f"{tmp}/postings")
     st.coalesce(1).write.parquet(f"{tmp}/stats")
@@ -2029,7 +2030,7 @@ def bm25_index_probe(
     # n_buckets is probed with the right partition pruning — never a
     # hardcoded 16 (r10 ADVICE).  Pre-stamp artifacts without the
     # column fall back to the historical default.
-    st = spark.read.parquet(f"{path}/stats").first()
+    st = read_parquet(spark, f"{path}/stats").first()
     n_docs, total_dl = st["n_docs"], st["total_dl"]
     n_buckets = st["n_buckets"] if "n_buckets" in st.asDict() else 16
     # bucket ids for the query terms via the same JVM hash (bounded:
@@ -2044,7 +2045,7 @@ def bm25_index_probe(
         .collect()
     )
     postings = (
-        spark.read.parquet(f"{path}/postings")
+        read_parquet(spark, f"{path}/postings")
         .filter(F.col("bucket").isin(bks) & F.col("term").isin(terms))
         .select("term", id_col, "dl", "tf")
     )

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warp_spark.aggregators import Aggregator
+from warp_spark.session import read_parquet
 
 
 def read_event_stream(
@@ -38,7 +39,12 @@ def read_event_stream(
     Streaming file sources require an explicit schema — pass one or
     give a batch-readable path to borrow the inferred schema from."""
     if schema is None:
-        schema = spark.read.format(fmt).load(path).schema
+        batch = (
+            read_parquet(spark, path)
+            if fmt == "parquet"
+            else spark.read.format(fmt).load(path)
+        )
+        schema = batch.schema
     reader = spark.readStream.format(fmt).schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
